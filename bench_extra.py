@@ -43,33 +43,22 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-DEFAULT_SF = "/root/testdata/sf0.1"
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import CPUS, HEADLINE, _scan_split_bytes  # noqa: E402
 
-HEADLINE = [
-    "pricing_summary", "top_revenue_customers", "events_sessions",
-    "doc_stats_by_lang", "dedup_survivors", "langid_heuristic",
-    "ann_cosine_top10", "minhash_bands", "simhash", "cosine_neardup_pairs",
-    "events_asof_purchase", "doc_length_percentiles", "gopher_line_flags",
-    "extract_documents",
-]
+DEFAULT_SF = "/root/testdata/sf0.1"
 
 
 def _session(app: str, sf_dir: str):
     from martial_arts_ocr_spark.engine.session import build_session
 
-    biggest = max(
-        (os.path.getsize(os.path.join(sf_dir, f))
-         for f in os.listdir(sf_dir) if f.endswith(".parquet")),
-        default=0,
-    )
-    split = min(max(biggest // (2 * CPUS), 2 << 20), 128 << 20)
     spark = build_session(
         master=f"local[{CPUS}]", shuffle_partitions=CPUS, app_name=app,
-        extra_conf={"spark.sql.files.maxPartitionBytes": str(split)},
+        extra_conf={"spark.sql.files.maxPartitionBytes":
+                    str(_scan_split_bytes(sf_dir, CPUS))},
     )
     spark.sparkContext.setLogLevel("ERROR")
     # same warmups as bench.py so first-run numbers are comparable
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.range(CPUS * 8).repartition(CPUS).mapInPandas(
         lambda it: it, schema="id long").count()

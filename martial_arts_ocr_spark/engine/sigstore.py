@@ -79,7 +79,14 @@ _FULL_KEY = ["snapshot", "doc_key", "band", "band_key"]
 
 def band_keys(docs: DataFrame, key_col: str = "doc_id",
               text_col: str = "text") -> DataFrame:
-    """(key_col, band, band_key) — one row per document per band."""
+    """(key_col, band, band_key) — one row per document per band.
+
+    The band-key UDF is marked ``asNondeterministic`` (see
+    queries.similarity._minhash_band_keys_udf), and this frame inherits
+    that: Catalyst pushes no filter on the result below the UDF call, so
+    none reaches the scan either. That is on purpose — pushing the
+    posexplode's inferred ``size(...) > 0`` filter down re-evaluated the
+    sketch. Filter ``docs`` before calling this instead."""
     from ..queries.similarity import _minhash_band_keys_udf
 
     mhb = _minhash_band_keys_udf()

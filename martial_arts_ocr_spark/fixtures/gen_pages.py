@@ -201,15 +201,3 @@ def pages_spark(spark, n: int, seed: int = SEED, partitions: int = 32):
         spark.range(n).repartition(partitions)
         .mapInPandas(gen, schema=PAGES_SCHEMA)
     )
-
-
-def write_pages_parquet(path: str, n: int, seed: int = SEED) -> None:
-    """Write the pages table as parquet (for bench / integration tests)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    df = pages_pandas(n, seed)
-    table = pa.Table.from_pandas(df, preserve_index=False)
-    # Spark cannot read TIMESTAMP(NANOS) parquet — coerce to micros
-    pq.write_table(table, path, coerce_timestamps="us",
-                   allow_truncated_timestamps=True)

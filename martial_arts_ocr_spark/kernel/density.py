@@ -67,19 +67,18 @@ _ASCII_NONPUNCT_DEL = {
 
 
 def _raw_features(text: str, lowered: str, is_ascii: bool):
-    """Shared counting core: (n, n_words, n_stop, word_chars, n_punct, n_ja)."""
+    """Counting core of score_block: (n, n_words, n_stop, n_punct, n_ja)."""
     n = len(text)
     words = _WORD_RE.findall(lowered)
     n_words = len(words)
     n_stop = sum(map(STOPWORDS.__contains__, words)) if n_words else 0
-    word_chars = sum(map(len, words)) if n_words else 0
     if is_ascii:
         n_punct = len(text.translate(_ASCII_NONPUNCT_DEL))
         n_ja = 0          # ja class is entirely non-ASCII
     else:
         n_punct = len(_PUNCT_RE.findall(text))
         n_ja = len(_JA_RE.findall(text))
-    return n, n_words, n_stop, word_chars, n_punct, n_ja
+    return n, n_words, n_stop, n_punct, n_ja
 
 
 def _boiler_phrase(text: str, lowered: str) -> bool:
@@ -87,25 +86,6 @@ def _boiler_phrase(text: str, lowered: str) -> bool:
         any(g in lowered for g in _BOILER_GUARDS)
         and BOILER_PHRASES_RE.search(text)
     )
-
-
-def block_features(b: Block) -> dict:
-    """Vectorizable per-block features (analogue of text_like_metrics)."""
-    text = b.text
-    lowered = text.lower()
-    n, n_words, n_stop, word_chars, n_punct, n_ja = _raw_features(
-        text, lowered, text.isascii()
-    )
-    return {
-        "n_chars": n,
-        "n_words": n_words,
-        "link_density": b.link_density,
-        "stopword_ratio": (n_stop / n_words) if n_words else 0.0,
-        "punct_ratio": (n_punct / n) if n else 0.0,
-        "ja_ratio": (n_ja / n) if n else 0.0,
-        "avg_word_len": (word_chars / n_words) if n_words else 0.0,
-        "boiler_phrase": _boiler_phrase(text, lowered),
-    }
 
 
 def score_block(b: Block) -> Verdict:
@@ -118,7 +98,7 @@ def score_block(b: Block) -> Verdict:
     if len(text) < MIN_BLOCK_CHARS:         # pre-gate before feature work
         return Verdict(False, 0.95, ("too_short",))
     lowered = text.lower()
-    n, n_words, n_stop, _wc, n_punct, n_ja = _raw_features(
+    n, n_words, n_stop, n_punct, n_ja = _raw_features(
         text, lowered, text.isascii()
     )
     link_density = b.link_density

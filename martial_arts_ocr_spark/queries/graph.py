@@ -193,10 +193,11 @@ def connected_components(edges: DataFrame, max_rounds: int = _MAX_ROUNDS,
 # returned (lazy) DataFrame — they cannot be freed inside
 # connected_components. Track the last invocation's result per
 # (application, SLOT) and free it when the next invocation of that slot
-# starts (the _SIG_CACHE eviction pattern), so a long session (gate +
-# bench + scaling in one process) holds at most ONE label-set per slot
-# of block-manager storage instead of one per call (review finding,
-# round 4; slot-scoping added round 7 — see neardup_cluster_labels).
+# starts (and drop stopped apps' entries, as tables.session_memo does),
+# so a long session (gate + bench + scaling in one process) holds at
+# most ONE label-set per slot of block-manager storage instead of one per
+# call (review finding, round 4; slot-scoping added round 7 — see
+# neardup_cluster_labels). A slot, not a memo: every call replaces it.
 _LAST_LABELS: dict[tuple[str, str], DataFrame] = {}
 
 

@@ -1,4 +1,10 @@
-"""Session-scoped memo for the read-only driver-table DataFrames.
+"""The session-scoped memo of ``queries/``, and the driver-table reads.
+
+``session_memo`` is the one memo in ``queries/``: every value a query
+reuses across invocations in one Spark application goes through it —
+base-table plans, table sizes and split counts, persisted signature
+tables, k-means centroids, LM cost tables. Keys lead with the
+application id, so a value never outlives the session that built it.
 
 ``spark.read.parquet(path)`` costs ~70-100 ms of driver-side work per call
 (InMemoryFileIndex listing + a footer-read job for schema inference) even
@@ -8,39 +14,52 @@ of times per process, so each repeated build pays that fixed cost inside
 the timed region for zero information.
 
 ``base_table`` memoizes the *unresolved DataFrame plan object* per
-(applicationId, sf_dir, table). This caches no data and no results: a
+(application, sf_dir, table). This caches no data and no results: a
 DataFrame is a lazy plan, every action against it still scans the parquet
 input (verified: noop-sink wall time of the memoized frame equals the
 fresh-read frame; only the ~80 ms plan-build repeat disappears). The
-driver tables are read-only fixtures (``/root/testdata/sf*`` is mounted
-r-x), so the staleness hazard that makes plan caching wrong for mutable
-warehouse tables (engine/catalog.py re-reads on purpose after compaction)
-does not exist here — do NOT route catalog/warehouse reads through this.
+driver tables are read-only fixtures (the sf* directories are mounted
+read-only), so the staleness hazard that makes plan caching wrong for
+mutable warehouse tables (engine/catalog.py re-reads on purpose after
+compaction) does not exist here — do NOT route catalog/warehouse reads
+through this.
 
-Eviction mirrors similarity._sig_cache_put (round-3 ADVICE): keys lead
-with applicationId and any entry from a different (stopped) application
-is dropped on insert, so pytest's many sessions per process cannot leak
-plans across sessions.
+Eviction: classic pyspark runs one active context per process, so any
+other application id belongs to a stopped session. Every insert first
+drops those entries, so pytest's many sessions per process cannot leak
+plans or persisted frames across sessions. Only the reference is
+dropped: the stopped application's blocks died with its SparkContext.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+_V = TypeVar("_V")
+
+_MEMO: dict[tuple, object] = {}
+
+
+def session_memo(spark: SparkSession, key: tuple,
+                 build: Callable[[], _V]) -> _V:
+    """The value stored under ``(applicationId, *key)``; on a miss,
+    ``build()`` runs once and its result is stored. A hit is key
+    presence, so falsy values (an empty model dict) are hits too."""
+    app = spark.sparkContext.applicationId
+    k = (app, *key)
+    if k not in _MEMO:
+        for old in [o for o in _MEMO if o[0] != app]:
+            del _MEMO[old]
+        _MEMO[k] = build()
+    return _MEMO[k]
 
 
 def base_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _TABLE_CACHE.get(key)
-    if df is None:
-        for k in [k for k in _TABLE_CACHE if k[0] != key[0]]:
-            del _TABLE_CACHE[k]
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _TABLE_CACHE[key] = df
-    return df
+    return session_memo(spark, (sf_dir, name),
+                        lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
 # Below this many compressed source bytes per scan partition the spread
@@ -109,12 +128,9 @@ def source_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Memoized on-disk size of a driver table (the spread threshold
     input). File size, not a Spark statistic: the driver tables are
     single plain parquet files on a read-only mount."""
-    key = (spark.sparkContext.applicationId, sf_dir, name, "bytes")
-    n = _TABLE_CACHE.get(key)
-    if n is None:
-        n = os.path.getsize(f"{sf_dir}/{name}.parquet")
-        _TABLE_CACHE[key] = n
-    return n
+    return session_memo(
+        spark, (sf_dir, name, "bytes"),
+        lambda: os.path.getsize(f"{sf_dir}/{name}.parquet"))
 
 
 def scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -126,12 +142,9 @@ def scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
     ``spread`` decision free. Valid because the split count of a
     read-only parquet path is fixed for the session (same files, same
     ``maxPartitionBytes``)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name, "nparts")
-    n = _TABLE_CACHE.get(key)
-    if n is None:
-        n = base_table(spark, sf_dir, name).rdd.getNumPartitions()
-        _TABLE_CACHE[key] = n
-    return n
+    return session_memo(
+        spark, (sf_dir, name, "nparts"),
+        lambda: base_table(spark, sf_dir, name).rdd.getNumPartitions())
 
 
 def spread_table(spark: SparkSession, sf_dir: str, name: str, *cols: str):

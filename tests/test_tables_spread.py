@@ -1,17 +1,25 @@
-"""Round-9 optimization internals: base-table memo + scale-adaptive spread.
+"""Round-9 optimization internals: session memo + scale-adaptive spread.
 
-``base_table`` caches only the lazy DataFrame *plan* per (application,
-sf_dir, name) — never rows; ``spread`` recovers parallelism only when the
-scan yields fewer partitions than the cluster has slots (single-row-group
-driver tables) and must be a strict no-op otherwise, so warehouse-scale
-plans are unchanged.
+``session_memo`` is the one session-scoped memo of ``queries/``: values
+are keyed by (application, *key) and entries of other applications are
+dropped on every insert. ``base_table`` memoizes only the lazy DataFrame
+*plan* per (application, sf_dir, name) — never rows; ``spread`` recovers
+parallelism only when the scan yields fewer partitions than the cluster
+has slots (single-row-group driver tables) and must be a strict no-op
+otherwise, so warehouse-scale plans are unchanged.
 """
 
 from __future__ import annotations
 
+import pytest
+
+from martial_arts_ocr_spark.queries.neardup import _learned_centroids
 from martial_arts_ocr_spark.queries.tables import (SPREAD_MIN_SOURCE_BYTES,
-                                                   _TABLE_CACHE, base_table,
-                                                   spread, spread_table)
+                                                   _MEMO, base_table,
+                                                   scan_partitions,
+                                                   session_memo,
+                                                   source_bytes, spread,
+                                                   spread_table)
 
 # uses the conftest session-scoped `spark` fixture — a module-local
 # fixture that calls .stop() would kill the process-global SparkContext
@@ -34,12 +42,56 @@ def test_base_table_memoizes_plan_per_session(spark):
 def test_base_table_evicts_other_applications(spark):
     base_table(spark, SF, "documents")
     app = spark.sparkContext.applicationId
-    _TABLE_CACHE[("dead-app", SF, "documents")] = object()
+    _MEMO[("dead-app", SF, "documents")] = object()
     # eviction runs on the INSERT path, so probe a table that is not
     # already cached for this session (cache hits skip eviction)
-    _TABLE_CACHE.pop((app, SF, "orders"), None)
+    _MEMO.pop((app, SF, "orders"), None)
     base_table(spark, SF, "orders")
-    assert all(k[0] == app for k in _TABLE_CACHE)
+    assert all(k[0] == app for k in _MEMO)
+
+
+@pytest.mark.parametrize("insert", [
+    lambda spark: base_table(spark, SF, "orders"),
+    lambda spark: source_bytes(spark, SF, "orders"),
+    lambda spark: scan_partitions(spark, SF, "orders"),
+    lambda spark: session_memo(spark, ("test", "value"), lambda: 1),
+], ids=["base_table", "source_bytes", "scan_partitions", "session_memo"])
+def test_any_memo_insert_evicts_dead_app_entries(spark, insert):
+    """Dead-app entries go on every insert path, frames and plain values
+    alike — and only the reference goes: the frame is not unpersisted
+    (a stopped app's blocks died with its SparkContext)."""
+    app = spark.sparkContext.applicationId
+    frame = spark.range(3).persist()
+    _MEMO[("dead-app", SF, "cosine_nd")] = frame
+    _MEMO[("dead-app", SF, "centroids")] = [[0.1, 0.2], [0.3, 0.4]]
+    for key in [(SF, "orders"), (SF, "orders", "bytes"),
+                (SF, "orders", "nparts"), ("test", "value")]:
+        _MEMO.pop((app, *key), None)   # force a miss, i.e. an insert
+    insert(spark)
+    assert _MEMO and all(k[0] == app for k in _MEMO)
+    assert frame.is_cached
+    frame.unpersist()
+
+
+def test_learned_centroids_are_session_scoped(spark):
+    app = spark.sparkContext.applicationId
+    cents = _learned_centroids(spark, SF)
+    keys = [k for k, v in _MEMO.items() if v is cents]
+    assert keys == [(app, SF, "centroids")]
+
+
+def test_falsy_value_is_a_memo_hit(spark):
+    calls = []
+
+    def build():
+        calls.append(1)
+        return {}                      # e.g. no usable per-lang LM model
+
+    key = ("test", "empty-dict")
+    _MEMO.pop((spark.sparkContext.applicationId, *key), None)
+    assert session_memo(spark, key, build) == {}
+    assert session_memo(spark, key, build) == {}
+    assert calls == [1]
 
 
 def test_spread_fires_only_below_parallelism(spark):

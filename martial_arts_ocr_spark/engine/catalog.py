@@ -3,7 +3,13 @@
 No Iceberg runtime jar exists in this sandbox, so tables are emulated as:
 
     <root>/<table>/part_bucket=<k>/*.parquet     data, partitioned
+    <root>/<table>/part-<uuid>.parquet           driver-appended rows
     <root>/<table>/_snapshots.json               append-only snapshot log
+
+The root is a driver-local POSIX directory: snapshot logs, compaction
+swaps and ``append_rows`` all commit by ``os.replace``. ``append_rows``
+writes a handful of lineage rows (checkpoints, metrics) as one parquet
+file from the driver with pyarrow, so committing them costs no Spark job.
 
 On a real cluster this module is replaced by Spark's Iceberg catalog::
 
@@ -11,7 +17,8 @@ On a real cluster this module is replaced by Spark's Iceberg catalog::
       --conf spark.sql.catalog.cc=org.apache.iceberg.spark.SparkCatalog ...
     df.writeTo("cc.db.extracted").append()
 
-The emulation is deliberately thin and labeled; the resume semantics built
+and ``append_rows`` by ``writeTo(...).append()`` of the same rows. The
+emulation is deliberately thin and labeled; the resume semantics built
 on top of it (engine/resume.py) — the part the north rule grades — are real
 and tested either way.
 """
@@ -23,6 +30,7 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _snapshot_path(root: str, table: str) -> str:
@@ -72,21 +80,57 @@ def read_table(spark: SparkSession, root: str, table: str) -> DataFrame:
     return spark.read.parquet(table_path(root, table))
 
 
+def _hidden(name: str) -> bool:
+    # Spark's file index skips these names, files and directories alike
+    return name.startswith(("_", "."))
+
+
 def table_exists(root: str, table: str) -> bool:
-    """True iff the table dir holds COMMITTED parquet data. ``_``-prefixed
-    subtrees are pruned (round-7 review, generalizing the ADVICE-r6 curate
-    fix to every caller): a writer crash mid-append leaves only Spark's
+    """True iff the table dir holds COMMITTED parquet data, i.e. parquet
+    files a Spark reader lists. ``_``/``.``-prefixed files and subtrees
+    are pruned (round-7 review, generalizing the ADVICE-r6 curate fix to
+    every caller): a writer crash mid-append leaves only Spark's
     ``_temporary/`` task files — part-*.parquet by name, invisible to any
-    reader — and counting them made resume paths attempt schema inference
-    over a dir with zero readable files."""
+    reader — or a hidden ``append_rows`` temp file, and counting them made
+    resume paths attempt schema inference over a dir with zero readable
+    files."""
     p = table_path(root, table)
     if not os.path.isdir(p):
         return False
     for _dirpath, dirs, files in os.walk(p):
-        dirs[:] = [d for d in dirs if not d.startswith("_")]
-        if any(f.endswith(".parquet") for f in files):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        if any(f.endswith(".parquet") and not _hidden(f) for f in files):
             return True
     return False
+
+
+def append_rows(root: str, table: str, rows: list[tuple],
+                schema: StructType) -> None:
+    """Append ``rows`` (tuples in ``schema``'s column order) to ``table``
+    as one parquet file written on the driver.
+
+    The file is written under a hidden temp name that readers and
+    ``table_exists`` skip, then renamed in as ``part-<uuid>.parquet``:
+    the append is one atomic rename, and a crash before it leaves only
+    an ignored orphan. Columns are written nullable, as Spark's own file
+    writer writes them, so files from either writer read back under one
+    schema. No rows, no file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not rows:
+        return
+    arrow = pa.schema([f.with_nullable(True)
+                       for f in to_arrow_schema(schema)])
+    data = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=arrow)
+    d = table_path(root, table)
+    os.makedirs(d, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}"
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(data, tmp)
+    os.replace(tmp, os.path.join(d, f"{name}.parquet"))
 
 
 def _bucket_dirs(root: str, table: str) -> list[str]:

@@ -67,6 +67,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import catalog
+from .schema import MIXTURE_CHECKPOINT_SCHEMA, PACKED_CHECKPOINT_SCHEMA
 from ..packing import CTX_LEN, N_BUCKETS, epoch_order_frame, \
     pack_token_sequences, content_hash_col, pack_bucket_col
 
@@ -77,11 +78,11 @@ PACKED_CKPT_TABLE = "packed_checkpoints"
 EPOCH_TABLE = "epoch_order"
 N_EPOCHS = 2          # default matches queries/corpus.py _N_EPOCHS
 
-# explicit schemas for resume-path reads (ADVICE r6: a crash during the
-# very first checkpoint append leaves the dir with only Spark's
-# _temporary subdir — isdir passes, schema inference throws, and the
-# runner whose purpose is crash-resume hard-blocks on every resume)
-_CKPT_SCHEMA = "run_id string, bucket int, snapshot_id string, status string"
+# explicit schemas for resume-path reads, the checkpoint tables' in
+# engine/schema.py (ADVICE r6: a crash during a table's very first append
+# leaves the dir with no readable file — isdir passes, schema inference
+# throws, and the runner whose purpose is crash-resume hard-blocks on
+# every resume)
 _PACKED_SCHEMA = ("seq_in_bucket bigint, n_docs_in_seq bigint, "
                   "n_tokens bigint, fill_ratio double, "
                   "token_ids array<bigint>, run_id string, bucket bigint")
@@ -276,7 +277,7 @@ def completed_pack_buckets(spark: SparkSession, root: str,
     path = catalog.table_path(root, PACKED_CKPT_TABLE)
     if not os.path.isdir(path) or not _has_parquet_files(path):
         return set()
-    rows = (spark.read.schema(_CKPT_SCHEMA).parquet(path)
+    rows = (spark.read.schema(PACKED_CHECKPOINT_SCHEMA).parquet(path)
             .where((F.col("run_id") == run_id)
                    & (F.col("status") == "completed"))
             .select("bucket").distinct().collect())
@@ -399,12 +400,10 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
             "run_id": run_id, "wave": wave_no,
             "buckets": [int(b) for b in wave],
         })
-        ckpt = spark.createDataFrame(
+        catalog.append_rows(
+            root, PACKED_CKPT_TABLE,
             [(run_id, int(b), sid, "completed") for b in wave],
-            "run_id string, bucket int, snapshot_id string, status string",
-        )
-        ckpt.write.mode("append").parquet(
-            catalog.table_path(root, PACKED_CKPT_TABLE))
+            PACKED_CHECKPOINT_SCHEMA)
 
     done_after = completed_pack_buckets(spark, root, run_id)
     summary = {
@@ -480,8 +479,6 @@ MIXTURE_PACKED_TABLE = "mixture_packed"
 MIXTURE_CKPT_TABLE = "mixture_checkpoints"
 MIXTURE_EPOCH_TABLE = "mixture_epoch_order"
 
-_MIX_CKPT_SCHEMA = ("run_id string, epoch int, bucket int, "
-                    "snapshot_id string, status string")
 _SAMPLED_SCHEMA = "doc_id bigint, source string, text string"
 
 
@@ -511,7 +508,7 @@ def completed_mix_pack(spark: SparkSession, root: str,
     path = catalog.table_path(root, MIXTURE_CKPT_TABLE)
     if not os.path.isdir(path) or not _has_parquet_files(path):
         return set()
-    rows = (spark.read.schema(_MIX_CKPT_SCHEMA).parquet(path)
+    rows = (spark.read.schema(MIXTURE_CHECKPOINT_SCHEMA).parquet(path)
             .where((F.col("run_id") == run_id)
                    & (F.col("status") == "completed"))
             .select("epoch", "bucket").distinct().collect())
@@ -672,11 +669,10 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
                 "run_id": run_id, "epoch": int(e),
                 "buckets": [int(b) for b in wave],
             })
-            ckpt = spark.createDataFrame(
+            catalog.append_rows(
+                root, MIXTURE_CKPT_TABLE,
                 [(run_id, int(e), int(b), sid, "completed") for b in wave],
-                _MIX_CKPT_SCHEMA)
-            ckpt.write.mode("append").parquet(
-                catalog.table_path(root, MIXTURE_CKPT_TABLE))
+                MIXTURE_CHECKPOINT_SCHEMA)
             pack_done.update((e, int(b)) for b in wave)
 
         # --- order stage: shard permutation over THIS epoch's pack --------

@@ -15,18 +15,21 @@ rows to per-partition table rows):
 * buckets are processed in **waves** (``batch_size`` buckets per Spark
   job — at 10^12 docs a snapshot is processed as a sequence of partition
   waves, never one monolithic job);
-* after each wave commits (data written to ``extracted/part_bucket=k/``),
-  one checkpoint row per bucket and one metrics row per bucket are appended,
-  then a snapshot entry is logged;
+* each wave commits with ONE Spark write: its data lands in
+  ``extracted/part_bucket=k/`` while an ``Observation`` on that write
+  counts the per-bucket metrics. The driver then appends one metrics row
+  per non-empty bucket (``catalog.append_rows``), logs a snapshot entry,
+  and appends one checkpoint row per bucket carrying the snapshot id;
 * resume = anti-join of buckets against completed checkpoint rows: a rerun
   of the same ``run_id`` processes only unfinished buckets, byte-identically
   (the kernel is a pure function, so reruns can't diverge).
 
 Crash atomicity in-sandbox: data for a wave lands under a temp dir and is
-renamed into place before its checkpoint rows are written — a wave is
-either fully visible+checkpointed or invisible; a crash between rename and
-checkpoint re-runs the wave, whose rename then replaces identical bytes
-(idempotent by determinism).
+renamed into place before its checkpoint rows are written, and the
+checkpoint append is itself one file rename — a wave is either fully
+visible+checkpointed or invisible; a crash between rename and checkpoint
+re-runs the wave, whose rename then replaces identical bytes (idempotent
+by determinism).
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import catalog
 from .job import run_extract, salted_key_col, with_host, with_salted_key
@@ -306,19 +309,6 @@ def _run_waves(spark, bucketed, root, run_id, n_buckets, batch_size,
             .cast("int"),
         ).persist()
 
-        # 1. write wave data to a temp dir, then rename per bucket (atomic).
-        #    The EXTRACTED rows (html already dropped — a fraction of the
-        #    input bytes) take one cheap shuffle onto part_bucket so each
-        #    bucket lands as one well-sized file instead of one sliver per
-        #    kernel task (the round-robin kernel stage would otherwise
-        #    write |cores| tiny files per bucket — the small-file death at
-        #    100 TB; one extracted-side shuffle is cheaper than
-        #    re-compacting). sortWithinPartitions clusters rows by
-        #    (host, url) inside each file so parquet row-group min/max
-        #    stats prune host-/url-filtered scans downstream;
-        #    part_bucket leads the sort so the partitioned writer's own
-        #    required partition-column ordering is already satisfied and
-        #    does not re-sort away the (host, url) clustering.
         tmp_dir = os.path.join(root, f"_tmp_wave_{run_id}_{wave_no}")
         try:
             if sign_snapshots:
@@ -338,7 +328,7 @@ def _run_waves(spark, bucketed, root, run_id, n_buckets, batch_size,
                     snapshot=sig_id,
                     key_col="url", text_col="text",
                 )
-            _commit_wave(spark, extracted, root, run_id, wave, wave_no,
+            _commit_wave(extracted, root, run_id, wave, wave_no,
                          tmp_dir, ext_path, files_per_bucket)
         finally:
             extracted.unpersist()
@@ -346,55 +336,84 @@ def _run_waves(spark, bucketed, root, run_id, n_buckets, batch_size,
     return processed
 
 
-def _commit_wave(spark, extracted, root, run_id, wave, wave_no, tmp_dir,
-                 ext_path, files_per_bucket) -> None:
-        (extracted.repartition(
-            max(len(wave), 1) * files_per_bucket, F.col("part_bucket"),
-            F.pmod(F.xxhash64("url"), F.lit(files_per_bucket)))
-         .sortWithinPartitions("part_bucket", "host", "url")
-         .write.mode("overwrite")
-         .partitionBy("part_bucket").parquet(tmp_dir))
-        os.makedirs(ext_path, exist_ok=True)
-        for b in wave:
-            src = os.path.join(tmp_dir, f"part_bucket={b}")
-            dst = os.path.join(ext_path, f"part_bucket={b}")
-            if os.path.isdir(src):
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)      # idempotent re-run of a wave
-                os.replace(src, dst)
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+def _bucket_metrics(wave: list[int]) -> list:
+    """METRICS_SCHEMA's counts, one aggregate per (wave bucket, metric),
+    named ``<metric>_<bucket>``. Each aggregates ``when(part_bucket == b,
+    x)``, which is null on every other bucket's rows, so it equals what
+    ``groupBy("part_bucket")`` aggregates over bucket ``b``."""
+    per_row = {
+        "n_docs": (F.count, F.lit(1)),
+        "n_completed": (F.sum, F.when(F.col("status") == "completed", 1)
+                        .otherwise(0)),
+        "n_failed": (F.sum, F.when(F.col("status") == "failed", 1)
+                     .otherwise(0)),
+        "n_bytes_in": (F.sum, F.col("n_bytes_in")),
+        "n_chars_out": (F.sum, F.length("text")),
+    }
+    return [agg(F.when(F.col("part_bucket") == b, x)).alias(f"{name}_{b}")
+            for b in wave for name, (agg, x) in per_row.items()]
 
-        # 2. per-partition metrics (lineage: run_id + bucket + counts +
-        #    input bytes), written through the declared METRICS_SCHEMA
-        metrics = (
-            extracted.groupBy("part_bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.when(F.col("status") == "completed", 1).otherwise(0))
-                .alias("n_completed"),
-                F.sum(F.when(F.col("status") == "failed", 1).otherwise(0))
-                .alias("n_failed"),
-                F.sum("n_bytes_in").alias("n_bytes_in"),
-                F.sum(F.length("text")).alias("n_chars_out"),
-            )
-            .withColumn("run_id", F.lit(run_id))
-            .select([F.col(f.name).cast(f.dataType)
-                     for f in METRICS_SCHEMA.fields])
-        )
-        (metrics.write.mode("append")
-         .parquet(catalog.table_path(root, METRICS_TABLE)))
 
-        # 3. snapshot entry, then checkpoint rows carrying its id — the
-        # checkpoint write is the commit point. A crash between steps 2
-        # and 3 re-runs the wave: the duplicate snapshot entry is harmless
-        # lineage noise, and the duplicate metrics rows are byte-identical
-        # (determinism) and collapsed by read_metrics' key dedup.
-        sid = catalog.append_snapshot(root, EXTRACTED_TABLE, {
-            "run_id": run_id, "wave": wave_no, "buckets": [int(b) for b in wave],
-        })
-        ckpt = spark.createDataFrame(
-            [(run_id, int(b), sid, "completed") for b in wave],
-            CHECKPOINT_SCHEMA,
-        )
-        (ckpt.write.mode("append")
-         .parquet(catalog.table_path(root, CHECKPOINT_TABLE)))
+def _wave_frame(extracted: DataFrame, wave: list[int],
+                files_per_bucket: int) -> tuple[DataFrame, Observation]:
+    """The wave's data-write frame and the Observation of its metrics.
+
+    The EXTRACTED rows (html already dropped — a fraction of the input
+    bytes) take one cheap shuffle onto part_bucket so each bucket lands
+    as one well-sized file instead of one sliver per kernel task (the
+    round-robin kernel stage would otherwise write |cores| tiny files per
+    bucket — the small-file death at 100 TB; one extracted-side shuffle is
+    cheaper than re-compacting). sortWithinPartitions clusters rows by
+    (host, url) inside each file so parquet row-group min/max stats prune
+    host-/url-filtered scans downstream; part_bucket leads the sort so the
+    partitioned writer's own required partition-column ordering is already
+    satisfied and does not re-sort away the (host, url) clustering.
+
+    The Observation sits above the last Exchange, in the result stage:
+    Spark applies a result task's accumulator updates once per partition,
+    so a retried map stage cannot double-count."""
+    obs = Observation()
+    frame = (extracted.repartition(
+        max(len(wave), 1) * files_per_bucket, F.col("part_bucket"),
+        F.pmod(F.xxhash64("url"), F.lit(files_per_bucket)))
+        .sortWithinPartitions("part_bucket", "host", "url")
+        .observe(obs, *_bucket_metrics(wave)))
+    return frame, obs
+
+
+def _commit_wave(extracted, root, run_id, wave, wave_no, tmp_dir, ext_path,
+                 files_per_bucket) -> None:
+    # 1. write wave data to a temp dir, then rename per bucket (atomic)
+    frame, obs = _wave_frame(extracted, wave, files_per_bucket)
+    frame.write.mode("overwrite").partitionBy("part_bucket").parquet(tmp_dir)
+    os.makedirs(ext_path, exist_ok=True)
+    for b in wave:
+        src = os.path.join(tmp_dir, f"part_bucket={b}")
+        dst = os.path.join(ext_path, f"part_bucket={b}")
+        if os.path.isdir(src):
+            if os.path.isdir(dst):
+                shutil.rmtree(dst)      # idempotent re-run of a wave
+            os.replace(src, dst)
+    shutil.rmtree(tmp_dir, ignore_errors=True)
+
+    # 2. per-partition metrics (lineage: run_id + bucket + counts + input
+    #    bytes) from the write's Observation; a bucket with no written row
+    #    gets no metrics row
+    m = obs.get
+    names = METRICS_SCHEMA.names[2:]
+    catalog.append_rows(root, METRICS_TABLE, [
+        (run_id, int(b), *(m[f"{n}_{b}"] for n in names))
+        for b in wave if m[f"n_docs_{b}"]
+    ], METRICS_SCHEMA)
+
+    # 3. snapshot entry, then checkpoint rows carrying its id — the
+    # checkpoint append is the commit point. A crash between steps 2 and 3
+    # re-runs the wave: the duplicate snapshot entry is harmless lineage
+    # noise, and the duplicate metrics rows are byte-identical
+    # (determinism) and collapsed by read_metrics' key dedup.
+    sid = catalog.append_snapshot(root, EXTRACTED_TABLE, {
+        "run_id": run_id, "wave": wave_no, "buckets": [int(b) for b in wave],
+    })
+    catalog.append_rows(
+        root, CHECKPOINT_TABLE,
+        [(run_id, int(b), sid, "completed") for b in wave], CHECKPOINT_SCHEMA)

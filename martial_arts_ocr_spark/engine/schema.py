@@ -134,3 +134,20 @@ CHECKPOINT_SCHEMA = T.StructType([
     T.StructField("snapshot_id", T.StringType(), True),
     T.StructField("status", T.StringType(), False),
 ])
+
+# curate.py's pack-wave checkpoints: the stage-2 packer's (per bucket) and
+# the mixture packer's (per epoch and bucket)
+PACKED_CHECKPOINT_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType(), False),
+    T.StructField("bucket", T.IntegerType(), False),
+    T.StructField("snapshot_id", T.StringType(), True),
+    T.StructField("status", T.StringType(), False),
+])
+
+MIXTURE_CHECKPOINT_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType(), False),
+    T.StructField("epoch", T.IntegerType(), False),
+    T.StructField("bucket", T.IntegerType(), False),
+    T.StructField("snapshot_id", T.StringType(), True),
+    T.StructField("status", T.StringType(), False),
+])

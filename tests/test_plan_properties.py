@@ -267,3 +267,25 @@ def test_packed_sequences_two_shuffle_shape(spark):
     assert plan.count("ArrowEvalPython") == 1
     assert plan.count("Exchange") == 2, plan[:1200]
     assert "Generate" in plan          # the bounded per-doc seq explode
+
+
+def test_wave_write_observes_metrics_in_result_stage(spark):
+    """The checkpointed runner counts each wave's per-bucket metrics with
+    an Observation on its data write. CollectMetrics must sit above the
+    write's last Exchange, in the result stage: Spark applies a result
+    task's accumulator updates once per partition, while a retried map
+    stage would add its tasks' updates again."""
+    from martial_arts_ocr_spark.engine.resume import _wave_frame
+
+    extracted = spark.createDataFrame(
+        [("https://a.example/1", "a.example", "completed", 10, "t", 0),
+         ("https://b.example/2", "b.example", "failed", 3, "", 1)],
+        "url string, host string, status string, n_bytes_in int, "
+        "text string, part_bucket int")
+    frame, _ = _wave_frame(extracted, [0, 1], 1)
+    lines = frame._jdf.queryExecution().executedPlan().toString() \
+        .splitlines()
+    observed = [i for i, ln in enumerate(lines) if "CollectMetrics" in ln]
+    exchanges = [i for i, ln in enumerate(lines) if _EXCHANGE_KINDS.match(ln)]
+    assert len(observed) == 1 and exchanges, "\n".join(lines)
+    assert observed[0] < min(exchanges), "\n".join(lines)

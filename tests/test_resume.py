@@ -6,6 +6,8 @@ granularity: crash mid-run → rerun → no duplicate work, complete output,
 byte-identical to an uninterrupted run.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -180,3 +182,144 @@ def test_second_run_id_refused_even_before_first_checkpoint(
     # the same run_id resumes normally and completes
     assert run_checkpointed(spark, p, root, run_id="r1",
                             n_buckets=4, batch_size=2) != []
+
+
+_RAW_PAGES = "url string, html binary, lang string"
+
+
+def _pages_with_gated_bucket(spark, n_buckets):
+    """A dirty corpus: normal pages on three hosts, null- and empty-html
+    rows, binary-garbage pages (some salvaged, some failed), and one host
+    whose rows all have null or empty html and whose bucket holds no
+    other host's rows. Returns (pages, the gated bucket)."""
+    import random
+
+    from martial_arts_ocr_spark.engine.resume import _bucketed
+
+    rows = []
+    for i, p in enumerate(pages_pandas(24).to_dict("records")):
+        host = ("a", "b", "c")[i % 3] + ".example"
+        rows.append((f"https://{host}/p{i}", p["html"], p["lang"]))
+    rows += [("https://a.example/null", None, "en"),
+             ("https://b.example/empty", b"", "en")]
+    rng = random.Random(7)
+    for i in range(4):
+        # no "<" byte, so no tag opens inside the junk: bare, it is
+        # salvaged as completed text; inside a script block nothing
+        # survives segmentation or salvage, so the row fails
+        junk = bytes(rng.randrange(62, 256) for _ in range(300))
+        html = junk if i % 2 else b"<script>" + junk + b"</script>"
+        rows.append((f"https://garbage.example/g{i}", html, ""))
+
+    def buckets(hosts):
+        df = spark.createDataFrame(
+            [(f"https://{h}/x", None, "") for h in hosts], _RAW_PAGES)
+        return {r.host: r.part_bucket for r in
+                _bucketed(df, n_buckets, None).collect()}
+
+    used = set(buckets(["a.example", "b.example", "c.example",
+                        "garbage.example"]).values())
+    gate_host, gated = next(
+        (h, b) for h, b in buckets([f"gate{i}.example"
+                                    for i in range(32)]).items()
+        if b not in used)
+    rows += [(f"https://{gate_host}/n{i}", html, "en")
+             for i, html in enumerate([None, b"", None])]
+    return spark.createDataFrame(rows, _RAW_PAGES), gated
+
+
+@pytest.mark.parametrize("batch_size", [2, 8])
+def test_observed_metrics_equal_groupby_reference(spark, tmp_path,
+                                                  batch_size):
+    """Each wave's metrics rows come from an Observation on its data
+    write. They must equal the groupBy("part_bucket") aggregation the
+    runner used before, applied to the written extracted table, which
+    this test keeps as the reference; a bucket whose rows all fall to
+    the P1 gate gets no metrics row but is still checkpointed."""
+    from martial_arts_ocr_spark.engine.resume import _bucketed
+    from martial_arts_ocr_spark.engine.schema import METRICS_SCHEMA
+
+    pages, gated = _pages_with_gated_bucket(spark, 8)
+    root = str(tmp_path / "wh")
+    run_checkpointed(spark, pages, root, run_id="m", n_buckets=8,
+                     batch_size=batch_size)
+
+    ext = catalog.read_table(spark, root, EXTRACTED_TABLE)
+    reference = (
+        ext.groupBy("part_bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.when(F.col("status") == "completed", 1).otherwise(0))
+            .alias("n_completed"),
+            F.sum(F.when(F.col("status") == "failed", 1).otherwise(0))
+            .alias("n_failed"),
+            F.sum("n_bytes_in").alias("n_bytes_in"),
+            F.sum(F.length("text")).alias("n_chars_out"),
+        )
+        .withColumn("run_id", F.lit("m"))
+        .select([F.col(f.name).cast(f.dataType)
+                 for f in METRICS_SCHEMA.fields])
+    )
+    want = sorted(tuple(r) for r in reference.collect())
+    got = sorted(tuple(r) for r in
+                 catalog.read_table(spark, root, METRICS_TABLE).collect())
+    assert got == want
+    assert sum(r[4] for r in want) > 0          # some rows failed
+    assert gated not in {r[1] for r in got}
+
+    ck = [(r.part_bucket, r.status) for r in
+          catalog.read_table(spark, root, CHECKPOINT_TABLE).collect()]
+    present = {r.part_bucket for r in
+               _bucketed(pages, 8, None).select("part_bucket")
+               .distinct().collect()}
+    assert gated in present
+    assert sorted(ck) == sorted((b, "completed") for b in present)
+
+
+def test_all_gated_corpus_checkpoints_without_metrics(spark, tmp_path):
+    """Waves whose rows all fall to the P1 gate write no data row: the
+    Observation on that empty write still reports, every bucket is
+    checkpointed, and no metrics row is appended."""
+    from martial_arts_ocr_spark.engine.resume import read_metrics
+
+    pages = spark.createDataFrame(
+        [(f"https://h{i}.example/x", None if i % 2 else b"", "en")
+         for i in range(12)], _RAW_PAGES)
+    root = str(tmp_path / "wh")
+    done = run_checkpointed(spark, pages, root, run_id="g", n_buckets=4,
+                            batch_size=2)
+    assert done
+    assert completed_buckets(spark, root, "g") == set(done)
+    assert read_metrics(spark, root).count() == 0
+    assert not catalog.table_exists(root, METRICS_TABLE)
+
+
+@pytest.mark.parametrize("leftover", ["hidden_parquet", "append_temp"])
+def test_table_exists_ignores_hidden_files(spark, tmp_path, monkeypatch,
+                                           leftover):
+    """Spark's file index skips ``_``/``.``-prefixed files; a table dir
+    holding only such a file has no readable data, so table_exists is
+    False and resume sees no completed bucket instead of inferring a
+    schema over zero files."""
+    from martial_arts_ocr_spark.engine.schema import CHECKPOINT_SCHEMA
+
+    root = str(tmp_path / "wh")
+    path = catalog.table_path(root, CHECKPOINT_TABLE)
+    if leftover == "hidden_parquet":
+        os.makedirs(path)
+        with open(os.path.join(path, ".x.parquet"), "wb") as f:
+            f.write(b"x")
+    else:
+        # a crash between append_rows' temp write and its rename
+        def crash(src, dst):
+            raise OSError("crash before rename")
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", crash)
+            with pytest.raises(OSError, match="crash before rename"):
+                catalog.append_rows(root, CHECKPOINT_TABLE,
+                                    [("r1", 0, "s", "completed")],
+                                    CHECKPOINT_SCHEMA)
+    assert len(os.listdir(path)) == 1
+    assert not catalog.table_exists(root, CHECKPOINT_TABLE)
+    assert completed_buckets(spark, root, "r1") == set()

@@ -7,9 +7,15 @@ No Iceberg runtime jar exists in this sandbox, so tables are emulated as:
     <root>/<table>/_snapshots.json               append-only snapshot log
 
 The root is a driver-local POSIX directory: snapshot logs, compaction
-swaps and ``append_rows`` all commit by ``os.replace``. ``append_rows``
-writes a handful of lineage rows (checkpoints, metrics) as one parquet
-file from the driver with pyarrow, so committing them costs no Spark job.
+and partition swaps and ``append_rows`` all commit by ``os.replace``.
+``append_rows`` writes a handful of lineage rows (checkpoints, metrics)
+as one parquet file from the driver with pyarrow, and ``read_rows``
+reads them back there, so neither costs a Spark job.
+
+The wave protocol of every runner (resume.py's extraction waves,
+curate.py's pack and mixture waves) lives here: ``pin_run`` and
+``sweep_tmp`` at entry; per wave ``replace_partitions``, a snapshot
+entry, then checkpoint rows by ``append_rows``; ``read_rows`` to resume.
 
 On a real cluster this module is replaced by Spark's Iceberg catalog::
 
@@ -17,16 +23,21 @@ On a real cluster this module is replaced by Spark's Iceberg catalog::
       --conf spark.sql.catalog.cc=org.apache.iceberg.spark.SparkCatalog ...
     df.writeTo("cc.db.extracted").append()
 
-and ``append_rows`` by ``writeTo(...).append()`` of the same rows. The
-emulation is deliberately thin and labeled; the resume semantics built
-on top of it (engine/resume.py) — the part the north rule grades — are real
-and tested either way.
+``append_rows`` by ``writeTo(...).append()`` of the same rows,
+``read_rows`` by a driver-side pyiceberg ``scan().to_arrow()``,
+``replace_partitions`` by ``writeTo(...).overwritePartitions()``,
+``pin_run`` by a table property set before the first write and
+``sweep_tmp`` by the ``remove_orphan_files`` procedure. The emulation is
+deliberately thin and labeled; the resume semantics built on top of it
+(engine/resume.py) — the part the north rule grades — are real and
+tested either way.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -133,6 +144,79 @@ def append_rows(root: str, table: str, rows: list[tuple],
     os.replace(tmp, os.path.join(d, f"{name}.parquet"))
 
 
+def read_rows(root: str, table: str) -> list[dict]:
+    """The committed rows of a lineage table, read on the driver: the
+    mirror of ``append_rows``. ``pyarrow.dataset`` skips ``_``/``.``-
+    prefixed files and dirs by default, as ``table_exists`` and Spark do,
+    so Spark-written and ``append_rows`` files read together, and
+    ``_SUCCESS``, ``_temporary/`` and orphaned temps do not."""
+    import pyarrow.dataset as ds
+
+    if not table_exists(root, table):
+        return []
+    return ds.dataset(table_path(root, table),
+                      format="parquet").to_table().to_pylist()
+
+
+def pin_run(root: str, prefix: str, run_id: str, cfg: dict) -> dict:
+    """Write ``cfg`` once as ``<root>/<prefix><run_id>.json``; return the
+    pinned config (``cfg`` first, the stored one on resume).
+
+    One root holds one run per prefix: a wave replaces its partitions
+    wholesale, so a second run_id would overwrite the first run's data.
+    The pin is written before any wave, so even a run that crashed before
+    its first checkpoint makes another run_id raise ``ValueError``."""
+    name = f"{prefix}{run_id}.json"
+    if os.path.isdir(root):
+        others = sorted(
+            n[len(prefix):-len(".json")] for n in os.listdir(root)
+            if n.startswith(prefix) and n.endswith(".json") and n != name)
+        if others:
+            raise ValueError(
+                f"warehouse root {root!r} already holds state of run_id(s) "
+                f"{others}; resume with the same run_id or use a fresh "
+                "warehouse")
+    path = os.path.join(root, name)
+    if os.path.exists(path):
+        with open(path, encoding="utf-8") as f:
+            return json.load(f)
+    os.makedirs(root, exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(cfg, f)
+    os.replace(tmp, path)
+    return cfg
+
+
+def sweep_tmp(root: str, prefix: str) -> None:
+    """Delete every ``<prefix>*`` entry under ``root``; runners call it at
+    entry, after ``pin_run``. A crash between a wave's temp write and its
+    swap leaves uncommitted, re-derivable data, under a name the resume
+    may never write again (resume.py numbers its waves from 0 again)."""
+    if os.path.isdir(root):
+        for name in os.listdir(root):
+            if name.startswith(prefix):
+                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+
+
+def replace_partitions(frame: DataFrame, col: str, values: list,
+                       dest: str, tmp: str) -> None:
+    """Write ``frame`` once, partitioned by ``col``, into the temp dir
+    ``tmp``; rename each ``tmp/<col>=<v>`` into ``dest``, replacing an
+    earlier copy (a re-run wave is idempotent); remove ``tmp``. A value
+    with no rows gets no directory."""
+    frame.write.mode("overwrite").partitionBy(col).parquet(tmp)
+    os.makedirs(dest, exist_ok=True)
+    for v in values:
+        src = os.path.join(tmp, f"{col}={v}")
+        dst = os.path.join(dest, f"{col}={v}")
+        if os.path.isdir(src):
+            if os.path.isdir(dst):
+                shutil.rmtree(dst)
+            os.replace(src, dst)
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
 def _bucket_dirs(root: str, table: str) -> list[str]:
     p = table_path(root, table)
     if not os.path.isdir(p):
@@ -212,7 +296,6 @@ def _recover_compaction(root: str, table: str,
     future ``extracted_v2``) — the subdir makes ownership structural.
     """
     import errno
-    import shutil
 
     tdir = table_path(root, table)
     if not os.path.isdir(tdir):
@@ -277,8 +360,6 @@ def compact_table(spark: SparkSession, root: str, table: str,
     real Iceberg makes the swap a metadata snapshot commit; this module
     is the labeled thin stand-in (see module docstring).
     """
-    import shutil
-
     files_before = files_after = 0
     buckets_rewritten = 0
     _recover_compaction(root, table)

@@ -52,15 +52,18 @@ sample as this runner's input corpus per epoch, paying the repack
 deliberately.
 
 Config pinning: semantic knobs that shape output (ctx_len, n_buckets,
-merge-table size, n_epochs) are pinned in ``_curate_<run_id>.json``;
-resuming with different values is refused (round-5 lesson: pin every
-knob that shapes restart-stable ids). batch_size is deliberately NOT
-pinned — wave composition cannot reach the per-bucket pure packer.
+merge-table size, n_epochs) are pinned in ``_curate_<run_id>.json``
+(``catalog.pin_run``, which also refuses a second run_id); resuming with
+different values is refused (round-5 lesson: pin every knob that shapes
+restart-stable ids). batch_size is deliberately NOT pinned — wave
+composition cannot reach the per-bucket pure packer. Temp dirs are named
+``_tmp_curate_<run_id>_...`` and swept at entry (``catalog.sweep_tmp``),
+so a crashed wave's temp dir does not outlive the next invocation. The
+wave commit and checkpoint read are catalog.py's, as in resume.py.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -99,32 +102,8 @@ def _kept_shuffle_width(spark: SparkSession, n_buckets: int) -> int:
     return min(4 * n_buckets, cap)
 
 
-def _has_parquet_files(path: str) -> bool:
-    # committed data only — delegates to the shared helper so the
-    # _temporary-pruning fix covers resume.py/sigstore.py too (r7 review)
-    return catalog.table_exists(os.path.dirname(path),
-                                os.path.basename(path))
-
-
-def _pin_path(root: str, run_id: str) -> str:
-    return os.path.join(root, f"_curate_{run_id}.json")
-
-
-def _pin_config(root: str, run_id: str, cfg: dict) -> None:
-    p = _pin_path(root, run_id)
-    if os.path.exists(p):
-        with open(p, encoding="utf-8") as f:
-            pinned = json.load(f)
-        if pinned != cfg:
-            raise ValueError(
-                f"resume with different curation config: pinned {pinned}, "
-                f"got {cfg} — packed output would not be comparable")
-        return
-    os.makedirs(root, exist_ok=True)
-    tmp = p + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(cfg, f)
-    os.replace(tmp, p)
+# prefix of every curate temp dir under the warehouse root
+_TMP_PREFIX = "_tmp_curate_"
 
 
 def _flags_path(root: str, run_id: str) -> str:
@@ -230,28 +209,29 @@ def _order_join_packed(order: DataFrame, packed: DataFrame) -> DataFrame:
                   ["bucket", "seq_in_bucket"]))
 
 
-def _guard_foreign_runs(root: str, run_id: str, packed_table: str) -> None:
-    """One warehouse = one curation run: packed bucket dirs are replaced
-    per wave, so a second run_id would silently overwrite the first run's
-    output (same guard run_checkpointed grew in r4). ADVICE r6: the
-    snapshot is appended AFTER the wave's bucket-dir moves, so a run that
-    crashed inside its first wave leaves orphan bucket dirs with NO
-    snapshot — key the guard on the config pin too (written before any
-    data lands), so a dead foreign run still refuses."""
-    foreign = [s["run_id"]
-               for s in catalog.read_snapshots(root, packed_table)
-               if s.get("run_id") not in (None, run_id)]
-    if os.path.isdir(root):
-        foreign += [
-            name[len("_curate_"):-len(".json")] for name in os.listdir(root)
-            if name.startswith("_curate_") and name.endswith(".json")
-            and name != os.path.basename(_pin_path(root, run_id))
-        ]
+def _begin_run(root: str, run_id: str, packed_table: str,
+               cfg: dict) -> None:
+    """Entry of both runners. One warehouse = one curation run: packed
+    bucket dirs are replaced per wave, so a second run_id would silently
+    overwrite the first run's output. A foreign run_id in the snapshots
+    refuses, and so does a foreign pin (ADVICE r6: a run that crashed
+    inside its first wave has no snapshot, but its pin predates its
+    data). Then the config must match the pin, and crashed waves' temp
+    dirs are swept."""
+    foreign = sorted({s["run_id"]
+                      for s in catalog.read_snapshots(root, packed_table)
+                      if s.get("run_id") not in (None, run_id)})
     if foreign:
         raise ValueError(
             f"warehouse {root} already holds curation state for run_id "
-            f"{sorted(set(foreign))} — a second run would overwrite its "
+            f"{foreign} — a second run would overwrite its "
             "bucket partitions; use a fresh warehouse")
+    pinned = catalog.pin_run(root, "_curate_", run_id, cfg)
+    if pinned != cfg:
+        raise ValueError(
+            f"resume with different curation config: pinned {pinned}, "
+            f"got {cfg} — packed output would not be comparable")
+    catalog.sweep_tmp(root, _TMP_PREFIX)
 
 
 def _ensure_flags(spark: SparkSession, docs_dir: str, root: str,
@@ -272,41 +252,22 @@ def _ensure_flags(spark: SparkSession, docs_dir: str, root: str,
     return spark.read.parquet(fpath)
 
 
-def completed_pack_buckets(spark: SparkSession, root: str,
-                           run_id: str) -> set[int]:
-    path = catalog.table_path(root, PACKED_CKPT_TABLE)
-    if not os.path.isdir(path) or not _has_parquet_files(path):
-        return set()
-    rows = (spark.read.schema(PACKED_CHECKPOINT_SCHEMA).parquet(path)
-            .where((F.col("run_id") == run_id)
-                   & (F.col("status") == "completed"))
-            .select("bucket").distinct().collect())
-    return {int(r["bucket"]) for r in rows}
+def completed_pack_buckets(root: str, run_id: str) -> set[int]:
+    return {r["bucket"] for r in catalog.read_rows(root, PACKED_CKPT_TABLE)
+            if r["run_id"] == run_id and r["status"] == "completed"}
 
 
 def _commit_wave_buckets(packed: DataFrame, run_id: str, wave: list[int],
                          root: str, tmp_name: str, dest_path: str) -> None:
-    """The pack wave's atomic commit, shared by both runners: tmp write
-    partitioned by bucket -> per-bucket dir replace (idempotent wave
-    re-run); a bucket with zero kept docs still completes — emit the bare
-    partition dir so resume marks it done (r7 gotcha: partitionBy writes
-    no dir for empty partitions)."""
-    tmp = os.path.join(root, tmp_name)
-    (packed.withColumn("run_id", F.lit(run_id))
-     .repartition(len(wave), "bucket")
-     .sortWithinPartitions("bucket", "seq_in_bucket")
-     .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
-    os.makedirs(dest_path, exist_ok=True)
-    for b in wave:
-        src = os.path.join(tmp, f"bucket={b}")
-        dst = os.path.join(dest_path, f"bucket={b}")
-        if os.path.isdir(src):
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)            # idempotent wave re-run
-            os.replace(src, dst)
-        else:
-            os.makedirs(dst, exist_ok=True)   # empty bucket still done
-    shutil.rmtree(tmp, ignore_errors=True)
+    """The pack wave's atomic data commit, shared by both runners: the
+    wave's bucket partitions replace any earlier copy
+    (``catalog.replace_partitions``). A bucket with zero kept docs gets no
+    dir; its checkpoint row alone marks it done."""
+    catalog.replace_partitions(
+        packed.withColumn("run_id", F.lit(run_id))
+        .repartition(len(wave), "bucket")
+        .sortWithinPartitions("bucket", "seq_in_bucket"),
+        "bucket", wave, dest_path, os.path.join(root, tmp_name))
 
 
 def _commit_epoch_order(packed: DataFrame, epoch: int, n_buckets: int,
@@ -344,8 +305,7 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
     epoch artifact and is pinned like every other semantic knob."""
     from ..bpe_merges_1k import BPE_MERGES_1K
 
-    _guard_foreign_runs(root, run_id, PACKED_TABLE)
-    _pin_config(root, run_id, {
+    _begin_run(root, run_id, PACKED_TABLE, {
         "n_buckets": n_buckets, "ctx_len": ctx_len,
         "n_merges": len(BPE_MERGES_1K), "n_epochs": n_epochs,
     })
@@ -382,7 +342,7 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
                                 {"run_id": run_id, "stage": "kept"})
 
     # --- stage 2: pack kept docs per bucket, waves with checkpoints -------
-    done = completed_pack_buckets(spark, root, run_id)
+    done = completed_pack_buckets(root, run_id)
     remaining = [b for b in range(n_buckets) if b not in done]
     packed_path = catalog.table_path(root, PACKED_TABLE)
     waves = [remaining[i:i + batch_size]
@@ -395,7 +355,8 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
         packed = pack_token_sequences(sub, ctx_len=ctx_len,
                                       n_buckets=n_buckets)
         _commit_wave_buckets(packed, run_id, wave, root,
-                             f"_pack_tmp_{run_id}_{wave[0]}", packed_path)
+                             f"{_TMP_PREFIX}{run_id}_pack_{wave[0]}",
+                             packed_path)
         sid = catalog.append_snapshot(root, PACKED_TABLE, {
             "run_id": run_id, "wave": wave_no,
             "buckets": [int(b) for b in wave],
@@ -405,7 +366,7 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
             [(run_id, int(b), sid, "completed") for b in wave],
             PACKED_CHECKPOINT_SCHEMA)
 
-    done_after = completed_pack_buckets(spark, root, run_id)
+    done_after = completed_pack_buckets(root, run_id)
     summary = {
         "run_id": run_id,
         "buckets_total": n_buckets,
@@ -437,7 +398,7 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
         edir = _epoch_path(root, run_id)
         for e in todo:
             _commit_epoch_order(packed, e, n_buckets, root,
-                                f"_epoch_tmp_{run_id}_{e}",
+                                f"{_TMP_PREFIX}{run_id}_epoch_{e}",
                                 os.path.join(edir, f"epoch={e}"))
             catalog.append_snapshot(root, EPOCH_TABLE,
                                     {"run_id": run_id, "stage": "epoch",
@@ -449,10 +410,9 @@ def run_curate(spark: SparkSession, docs_dir: str, root: str, run_id: str,
 
 
 def read_packed(spark: SparkSession, root: str) -> DataFrame:
-    """The packed-sequence table (bucket-partitioned; empty buckets are
-    bare dirs with no files and simply contribute no rows). Schema is
-    pinned explicitly: an all-empty-bucket table has no file to infer
-    from (ADVICE r6)."""
+    """The packed-sequence table (bucket-partitioned; empty buckets have
+    no dir and simply contribute no rows). Schema is pinned explicitly:
+    an all-empty-bucket table has no file to infer from (ADVICE r6)."""
     return (spark.read.schema(_PACKED_SCHEMA)
             .option("basePath", catalog.table_path(root, PACKED_TABLE))
             .parquet(catalog.table_path(root, PACKED_TABLE)))
@@ -503,16 +463,10 @@ def _mix_snapshots(root: str, table: str, run_id: str,
             if s.get("run_id") == run_id and s.get("stage") == stage}
 
 
-def completed_mix_pack(spark: SparkSession, root: str,
-                       run_id: str) -> set[tuple[int, int]]:
-    path = catalog.table_path(root, MIXTURE_CKPT_TABLE)
-    if not os.path.isdir(path) or not _has_parquet_files(path):
-        return set()
-    rows = (spark.read.schema(MIXTURE_CHECKPOINT_SCHEMA).parquet(path)
-            .where((F.col("run_id") == run_id)
-                   & (F.col("status") == "completed"))
-            .select("epoch", "bucket").distinct().collect())
-    return {(int(r["epoch"]), int(r["bucket"])) for r in rows}
+def completed_mix_pack(root: str, run_id: str) -> set[tuple[int, int]]:
+    return {(r["epoch"], r["bucket"])
+            for r in catalog.read_rows(root, MIXTURE_CKPT_TABLE)
+            if r["run_id"] == run_id and r["status"] == "completed"}
 
 
 def read_mixture_sampled(spark: SparkSession, root: str, run_id: str,
@@ -533,7 +487,7 @@ def read_mixture_packed(spark: SparkSession, root: str, run_id: str,
         # of a raw path-not-found AnalysisException
         raise FileNotFoundError(
             f"mixture epoch {epoch} has no packed output for run_id "
-            f"{run_id} under {base} (see completed_mix_pack(spark, root, "
+            f"{run_id} under {base} (see completed_mix_pack(root, "
             "run_id) for which (epoch, bucket) waves have committed)")
     return (spark.read.schema(_PACKED_SCHEMA)
             .option("basePath", base).parquet(base))
@@ -581,8 +535,7 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
                                   mixture_threshold_sample)
 
     epoch_docs = _MIX_EPOCH_DOCS if epoch_docs is None else int(epoch_docs)
-    _guard_foreign_runs(root, run_id, MIXTURE_PACKED_TABLE)
-    _pin_config(root, run_id, {
+    _begin_run(root, run_id, MIXTURE_PACKED_TABLE, {
         "mode": "mixture", "n_buckets": n_buckets, "ctx_len": ctx_len,
         "n_merges": len(BPE_MERGES_1K), "n_epochs": n_epochs,
         "epoch_docs": epoch_docs, "salt": _MIX_THRESH_SALT,
@@ -620,7 +573,7 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
                                   "mix_sample")
     order_done = _mix_snapshots(root, MIXTURE_EPOCH_TABLE, run_id,
                                 "mix_epoch")
-    pack_done = completed_mix_pack(spark, root, run_id)
+    pack_done = completed_mix_pack(root, run_id)
 
     for e in epochs:
         # --- sample stage: materialize epoch e's quota-drawn corpus -------
@@ -662,9 +615,9 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
                 .select("doc_id", "text")
             packed = pack_token_sequences(sub, ctx_len=ctx_len,
                                           n_buckets=n_buckets)
-            _commit_wave_buckets(packed, run_id, wave, root,
-                                 f"_mixpack_tmp_{run_id}_{e}_{wave[0]}",
-                                 ppath)
+            _commit_wave_buckets(
+                packed, run_id, wave, root,
+                f"{_TMP_PREFIX}{run_id}_mixpack_{e}_{wave[0]}", ppath)
             sid = catalog.append_snapshot(root, MIXTURE_PACKED_TABLE, {
                 "run_id": run_id, "epoch": int(e),
                 "buckets": [int(b) for b in wave],
@@ -680,7 +633,7 @@ def run_curate_mixture(spark: SparkSession, docs_dir: str, root: str,
         if e not in order_done and len(epoch_packed) == n_buckets:
             packed_e = read_mixture_packed(spark, root, run_id, e)
             _commit_epoch_order(packed_e, e, n_buckets, root,
-                                f"_mixorder_tmp_{run_id}_{e}",
+                                f"{_TMP_PREFIX}{run_id}_mixorder_{e}",
                                 _mix_epoch_path(root, run_id, e))
             catalog.append_snapshot(root, MIXTURE_EPOCH_TABLE,
                                     {"run_id": run_id, "stage": "mix_epoch",

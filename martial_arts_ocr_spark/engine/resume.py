@@ -20,22 +20,25 @@ rows to per-partition table rows):
   counts the per-bucket metrics. The driver then appends one metrics row
   per non-empty bucket (``catalog.append_rows``), logs a snapshot entry,
   and appends one checkpoint row per bucket carrying the snapshot id;
-* resume = anti-join of buckets against completed checkpoint rows: a rerun
-  of the same ``run_id`` processes only unfinished buckets, byte-identically
+* resume = anti-join of buckets against completed checkpoint rows, which
+  the driver reads back itself (``catalog.read_rows``): a rerun of the
+  same ``run_id`` processes only unfinished buckets, byte-identically
   (the kernel is a pure function, so reruns can't diverge).
 
 Crash atomicity in-sandbox: data for a wave lands under a temp dir and is
-renamed into place before its checkpoint rows are written, and the
-checkpoint append is itself one file rename — a wave is either fully
-visible+checkpointed or invisible; a crash between rename and checkpoint
-re-runs the wave, whose rename then replaces identical bytes (idempotent
-by determinism).
+renamed into place per bucket (``catalog.replace_partitions``) before its
+checkpoint rows are written, and the checkpoint append is itself one file
+rename — a wave is either fully visible+checkpointed or invisible; a
+crash between rename and checkpoint re-runs the wave, whose rename then
+replaces identical bytes (idempotent by determinism). The run pin
+(``catalog.pin_run``, ``_run_<id>.json``) and the entry sweep of crashed
+waves' ``_tmp_wave_*`` dirs (``catalog.sweep_tmp``) are the same
+protocol pieces curate.py's pack and mixture runners use.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -79,58 +82,72 @@ def read_metrics(spark: SparkSession, root: str) -> DataFrame:
     )
 
 
-def completed_buckets(spark: SparkSession, root: str, run_id: str) -> set[int]:
-    if not catalog.table_exists(root, CHECKPOINT_TABLE):
-        return set()
-    df = catalog.read_table(spark, root, CHECKPOINT_TABLE)
-    rows = (
-        df.where((F.col("run_id") == run_id) & (F.col("status") == "completed"))
-        .select("part_bucket").distinct().collect()
-    )
-    return {r.part_bucket for r in rows}
+def completed_buckets(root: str, run_id: str) -> set[int]:
+    return {r["part_bucket"]
+            for r in catalog.read_rows(root, CHECKPOINT_TABLE)
+            if r["run_id"] == run_id and r["status"] == "completed"}
 
 
 _DEFAULT_BATCH_SIZE = 4
 
 
-def _pin_run_config(root: str, run_id: str, hot_hosts: list[str] | None,
-                    n_buckets: int, batch_size: int, sign_snapshots: bool
+def _pin_run_config(run_id: str, pinned: dict, batch_size: int | None,
+                    sign_snapshots: bool
                     ) -> tuple[list[str] | None, int, int, bool]:
-    """Persist (hot_hosts, n_buckets, batch_size, sign_snapshots) on
-    first run; reload on resume.
+    """(hot_hosts, n_buckets, batch_size, sign_snapshots) for this
+    invocation, resolved against the run's pinned config.
 
     Bucket assignment depends on the first two — a resume that re-derived
     a different hot-host list would shift keys and double-process
-    documents. Wave COMPOSITION depends on batch_size: the signature
-    store's exactly-once snapshot ids derive from each wave's bucket set
-    (round-5 second-pass review find: resuming with a different
-    batch_size regrouped pending buckets into fresh ids and re-signed
-    already-signed buckets under ids read_store's dedup cannot collapse).
-    And signing itself must be consistent across every wave of a run
-    (fourth-pass find), so sign_snapshots is pinned too. The first run's
-    config is authoritative for its run_id.
+    documents — so they follow the pin. Wave COMPOSITION depends on
+    batch_size: the signature store's exactly-once snapshot ids derive
+    from each wave's bucket set (round-5 second-pass review find:
+    resuming with a different batch_size regrouped pending buckets into
+    fresh ids and re-signed already-signed buckets under ids read_store's
+    dedup cannot collapse). And signing itself must be consistent across
+    every wave of a run (fourth-pass find), so sign_snapshots is pinned
+    too. The first run's config is authoritative for its run_id.
     """
-    import json
-    import os
+    import warnings
 
-    path = os.path.join(root, f"_run_{run_id}.json")
-    if os.path.exists(path):
-        with open(path, encoding="utf-8") as f:
-            cfg = json.load(f)
-        # pre-round-5 pin files lack the newer fields; fall back to the
-        # caller's values (no signed run can predate the fields — signing
-        # itself is round-5)
-        return (cfg["hot_hosts"], cfg["n_buckets"],
-                cfg.get("batch_size", batch_size),
-                cfg.get("sign_snapshots", sign_snapshots))
-    os.makedirs(root, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"hot_hosts": hot_hosts, "n_buckets": n_buckets,
-                   "batch_size": batch_size,
-                   "sign_snapshots": sign_snapshots}, f)
-    os.replace(tmp, path)
-    return hot_hosts, n_buckets, batch_size, sign_snapshots
+    # pre-round-5 pin files lack the newer fields; fall back to the
+    # caller's values (no signed run can predate the fields — signing
+    # itself is round-5)
+    pinned_bs = pinned.get(
+        "batch_size", _DEFAULT_BATCH_SIZE if batch_size is None else batch_size)
+    pinned_sign = pinned.get("sign_snapshots", sign_snapshots)
+    # sign_snapshots follows the pin unconditionally (round-5 fourth-pass
+    # find: a resume that forgot the flag silently committed waves with
+    # no signature append, leaving the store permanently missing those
+    # documents while their buckets checkpointed 'completed').
+    if sign_snapshots != pinned_sign:
+        warnings.warn(
+            f"run {run_id!r}: sign_snapshots={sign_snapshots} ignored — "
+            f"the run was pinned with sign_snapshots={pinned_sign} and "
+            f"signing must be consistent across every wave")
+        sign_snapshots = pinned_sign
+    # batch_size must follow the pin only when signing (snapshot ids
+    # derive from wave bucket sets). batch_size=None — the config-less
+    # resume — always takes the pinned value (fourth-pass find: comparing
+    # against the signature DEFAULT made a flag-less resume look like an
+    # explicit override). An EXPLICIT divergent width on an unsigned run
+    # is a legitimate operational recovery lever (e.g. shrink per-wave
+    # memory after an OOM) — honored, loudly.
+    if batch_size is None:
+        batch_size = pinned_bs
+    elif batch_size != pinned_bs:
+        if sign_snapshots:
+            warnings.warn(
+                f"run {run_id!r}: batch_size={batch_size} ignored — "
+                f"signed runs use the pinned batch_size={pinned_bs} "
+                f"(signature snapshot ids derive from wave composition)")
+            batch_size = pinned_bs
+        else:
+            warnings.warn(
+                f"run {run_id!r}: resuming with batch_size={batch_size} "
+                f"(pinned value was {pinned_bs}; wave width is an "
+                f"operational knob for unsigned runs)")
+    return pinned["hot_hosts"], pinned["n_buckets"], batch_size, sign_snapshots
 
 
 def run_checkpointed(
@@ -177,76 +194,19 @@ def run_checkpointed(
     drop documents already ingested — incremental cross-snapshot dedup as
     a pipeline flow, not just a registered query.
     """
-    # one corpus snapshot per warehouse root: the extracted table's
-    # bucket dirs are replaced wholesale per wave, so a SECOND run_id
-    # over the same root would silently delete the first run's data for
-    # every overlapping bucket while the first run's checkpoints still
-    # claim it (review-found). Resume of the SAME run_id is the designed
-    # multi-invocation path; a new snapshot gets a new --warehouse.
-    # The guard scans the _run_<id>.json config pins, NOT the checkpoints
-    # table: a run that crashed after renaming wave data into extracted/
-    # but before its first checkpoint write leaves zero checkpoint rows,
-    # and a second run_id would then silently mix the crashed run's
-    # leftover bucket dirs into its snapshot (round-4 ADVICE). The pin is
-    # written by _pin_run_config at entry, BEFORE any wave, so it exists
-    # for every run that could possibly have touched the warehouse.
-    if os.path.isdir(root):
-        others = sorted(
-            n[len("_run_"):-len(".json")] for n in os.listdir(root)
-            if n.startswith("_run_") and n.endswith(".json")
-            and n != f"_run_{run_id}.json"
-        )
-        if others:
-            raise ValueError(
-                f"warehouse root {root!r} already holds extracted data "
-                f"for run_id(s) {others}; use the same --run-id "
-                f"to resume or a fresh --warehouse for a new snapshot")
-    # stale _tmp_wave_* dirs from a hard crash are re-derivable
-    # (uncommitted by construction) but wave numbering restarts on
-    # resume, so nothing would ever reclaim them — sweep at entry
-    if os.path.isdir(root):
-        for name in os.listdir(root):
-            if name.startswith("_tmp_wave_"):
-                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-
-    import warnings
-
-    hot_hosts, n_buckets, pinned_bs, pinned_sign = _pin_run_config(
-        root, run_id, hot_hosts, n_buckets,
-        _DEFAULT_BATCH_SIZE if batch_size is None else batch_size,
-        sign_snapshots)
-    # sign_snapshots follows the pin unconditionally (round-5 fourth-pass
-    # find: a resume that forgot the flag silently committed waves with
-    # no signature append, leaving the store permanently missing those
-    # documents while their buckets checkpointed 'completed').
-    if sign_snapshots != pinned_sign:
-        warnings.warn(
-            f"run {run_id!r}: sign_snapshots={sign_snapshots} ignored — "
-            f"the run was pinned with sign_snapshots={pinned_sign} and "
-            f"signing must be consistent across every wave")
-        sign_snapshots = pinned_sign
-    # hot_hosts/n_buckets MUST follow the pin (bucket assignment);
-    # batch_size must only when signing (snapshot ids derive from wave
-    # bucket sets). batch_size=None — the config-less resume — always
-    # takes the pinned value (fourth-pass find: comparing against the
-    # signature DEFAULT made a flag-less resume look like an explicit
-    # override). An EXPLICIT divergent width on an unsigned run is a
-    # legitimate operational recovery lever (e.g. shrink per-wave memory
-    # after an OOM) — honored, loudly.
-    if batch_size is None:
-        batch_size = pinned_bs
-    elif batch_size != pinned_bs:
-        if sign_snapshots:
-            warnings.warn(
-                f"run {run_id!r}: batch_size={batch_size} ignored — "
-                f"signed runs use the pinned batch_size={pinned_bs} "
-                f"(signature snapshot ids derive from wave composition)")
-            batch_size = pinned_bs
-        else:
-            warnings.warn(
-                f"run {run_id!r}: resuming with batch_size={batch_size} "
-                f"(pinned value was {pinned_bs}; wave width is an "
-                f"operational knob for unsigned runs)")
+    # one corpus snapshot per warehouse root (catalog.pin_run): the
+    # extracted table's bucket dirs are replaced wholesale per wave, so a
+    # second run_id would delete the first run's data. Resume of the SAME
+    # run_id is the designed multi-invocation path; a new snapshot gets a
+    # new --warehouse.
+    pinned = catalog.pin_run(root, "_run_", run_id, {
+        "hot_hosts": hot_hosts, "n_buckets": n_buckets,
+        "batch_size": _DEFAULT_BATCH_SIZE if batch_size is None
+        else batch_size,
+        "sign_snapshots": sign_snapshots})
+    catalog.sweep_tmp(root, "_tmp_wave_")
+    hot_hosts, n_buckets, batch_size, sign_snapshots = _pin_run_config(
+        run_id, pinned, batch_size, sign_snapshots)
     bucketed = _bucketed(pages, n_buckets, hot_hosts).persist()
     try:
         return _run_waves(spark, bucketed, root, run_id, n_buckets,
@@ -263,7 +223,7 @@ def _run_waves(spark, bucketed, root, run_id, n_buckets, batch_size,
         r.part_bucket
         for r in bucketed.select("part_bucket").distinct().collect()
     )
-    done = completed_buckets(spark, root, run_id)
+    done = completed_buckets(root, run_id)
     pending = [b for b in present if b not in done]
 
     processed: list[int] = []
@@ -385,16 +345,7 @@ def _commit_wave(extracted, root, run_id, wave, wave_no, tmp_dir, ext_path,
                  files_per_bucket) -> None:
     # 1. write wave data to a temp dir, then rename per bucket (atomic)
     frame, obs = _wave_frame(extracted, wave, files_per_bucket)
-    frame.write.mode("overwrite").partitionBy("part_bucket").parquet(tmp_dir)
-    os.makedirs(ext_path, exist_ok=True)
-    for b in wave:
-        src = os.path.join(tmp_dir, f"part_bucket={b}")
-        dst = os.path.join(ext_path, f"part_bucket={b}")
-        if os.path.isdir(src):
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)      # idempotent re-run of a wave
-            os.replace(src, dst)
-    shutil.rmtree(tmp_dir, ignore_errors=True)
+    catalog.replace_partitions(frame, "part_bucket", wave, ext_path, tmp_dir)
 
     # 2. per-partition metrics (lineage: run_id + bucket + counts + input
     #    bytes) from the write's Observation; a bucket with no written row

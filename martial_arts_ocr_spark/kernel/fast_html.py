@@ -3,10 +3,10 @@
 ``html.parser``'s generic tokenizer is ~40% of kernel time. This module
 tokenizes with one compiled regex and drives the SAME ``_BlockParser``
 handlers (html_blocks.py), so all block/chrome/figure semantics live in
-exactly one place. Selection via ``segment_blocks(..., engine=...)`` or the
-``SPARK_GRAFT_HTML_ENGINE`` env var; equivalence with the stdlib path is
-enforced by an A/B test over fixtures + fuzz corpora
-(tests/test_fast_html_equivalence.py).
+exactly one place. ``segment_blocks`` uses it by default; its
+``engine="stdlib"`` path (``html.parser``) is the reference, and
+equivalence with it is enforced by an A/B test over fixtures + fuzz
+corpora (tests/test_fast_html_equivalence.py).
 
 Behaviors replicated from html.parser (convert_charrefs=True):
 * charrefs decoded in text data and attribute values;

@@ -59,12 +59,12 @@ def test_crash_then_resume_is_byte_identical(spark, tmp_path, single_shot):
     partial = run_curate(spark, SF, root, "run-b", batch_size=4, max_waves=1)
     assert not partial["complete"]
     assert partial["buckets_completed"] == 4
-    done_before = completed_pack_buckets(spark, root, "run-b")
+    done_before = completed_pack_buckets(root, "run-b")
 
     resumed = run_curate(spark, SF, root, "run-b", batch_size=4)
     assert resumed["complete"]
     # resume did not redo finished buckets' checkpoints under a new wave 0
-    assert done_before <= completed_pack_buckets(spark, root, "run-b")
+    assert done_before <= completed_pack_buckets(root, "run-b")
     assert _packed_content(spark, root) == _packed_content(spark, ref_root)
 
 
@@ -224,7 +224,7 @@ def test_resume_survives_checkpoint_dir_with_no_committed_files(spark,
     root = str(tmp_path / "wh_crash_ckpt")
     ckpt_dir = catalog.table_path(root, PACKED_CKPT_TABLE)
     os.makedirs(os.path.join(ckpt_dir, "_temporary", "0"))
-    assert completed_pack_buckets(spark, root, "run-h") == set()
+    assert completed_pack_buckets(root, "run-h") == set()
 
 
 def test_epoch_stream_is_packed_sequences_permuted(spark, single_shot):
@@ -259,3 +259,66 @@ def test_epoch_stream_is_packed_sequences_permuted(spark, single_shot):
         # key never mixed (vanishingly unlikely above a few sequences)
         if len(rows) > 4:
             assert [s for _, s in rows] != sorted(s for _, s in rows), bucket
+
+
+def test_crashed_wave_temp_dir_swept_on_resume(spark, tmp_path, monkeypatch,
+                                               single_shot):
+    """A crash between a pack wave's temp write and its swap leaves the
+    temp dir under the root. Every later invocation sweeps it at entry,
+    even a status poll that packs nothing, and the resume, here at
+    another batch_size (not pinned), leaves no temp entry behind and
+    packs the same bytes."""
+    import os
+
+    from martial_arts_ocr_spark.engine.curate import run_curate
+
+    ref_root, _ = single_shot
+    root = str(tmp_path / "wh_tmp_sweep")
+    real_replace = os.replace
+
+    def crash_on_bucket_4(src, dst):
+        if os.path.basename(src) == "bucket=4":
+            raise OSError("crash before swap")
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_on_bucket_4)
+        with pytest.raises(OSError, match="crash before swap"):
+            run_curate(spark, SF, root, "run-t", batch_size=4)
+    assert [n for n in os.listdir(root) if "_tmp_" in n]
+
+    polled = run_curate(spark, SF, root, "run-t", batch_size=3, max_waves=0)
+    assert polled["buckets_completed"] == 4
+    assert not [n for n in os.listdir(root) if "_tmp_" in n]
+
+    resumed = run_curate(spark, SF, root, "run-t", batch_size=3)
+    assert resumed["complete"] and resumed["epochs_complete"]
+    assert not [n for n in os.listdir(root) if "_tmp_" in n]
+    assert _packed_content(spark, root) == _packed_content(spark, ref_root)
+
+
+def test_empty_pack_bucket_completes(spark, tmp_path):
+    """A pack bucket with no kept doc writes no partition dir; its
+    checkpoint row alone marks it done, and the packed table and epoch
+    streams read past it."""
+    from martial_arts_ocr_spark.engine.curate import (
+        read_epoch_stream,
+        read_packed,
+        run_curate,
+    )
+
+    n = 128                     # sf0.001 leaves some of 128 buckets empty
+    root = str(tmp_path / "wh_empty_bucket")
+    summary = run_curate(spark, SF, root, "run-z", batch_size=n,
+                         n_buckets=n)
+    packed = sorted((r["bucket"], r["seq_in_bucket"]) for r in
+                    read_packed(spark, root)
+                    .select("bucket", "seq_in_bucket").collect())
+    assert len({b for b, _ in packed}) < n
+    assert summary["buckets_completed"] == n and summary["complete"]
+    assert summary["epochs_complete"]
+    for e in range(summary["epochs_total"]):
+        stream = sorted((r["bucket"], r["seq_in_bucket"]) for r in
+                        read_epoch_stream(spark, root, "run-z", e)
+                        .select("bucket", "seq_in_bucket").collect())
+        assert stream == packed, e

@@ -37,7 +37,7 @@ def test_crash_then_resume_exactly(spark, pages, tmp_path):
         run_checkpointed(spark, pages, root, run_id="r1",
                          n_buckets=8, batch_size=2, fail_after_waves=1)
 
-    done_after_crash = completed_buckets(spark, root, "r1")
+    done_after_crash = completed_buckets(root, "r1")
     assert 0 < len(done_after_crash) <= 2     # exactly one wave committed
 
     # run 2: resume — must process only the remaining buckets
@@ -289,7 +289,7 @@ def test_all_gated_corpus_checkpoints_without_metrics(spark, tmp_path):
     done = run_checkpointed(spark, pages, root, run_id="g", n_buckets=4,
                             batch_size=2)
     assert done
-    assert completed_buckets(spark, root, "g") == set(done)
+    assert completed_buckets(root, "g") == set(done)
     assert read_metrics(spark, root).count() == 0
     assert not catalog.table_exists(root, METRICS_TABLE)
 
@@ -322,4 +322,43 @@ def test_table_exists_ignores_hidden_files(spark, tmp_path, monkeypatch,
                                     CHECKPOINT_SCHEMA)
     assert len(os.listdir(path)) == 1
     assert not catalog.table_exists(root, CHECKPOINT_TABLE)
-    assert completed_buckets(spark, root, "r1") == set()
+    assert completed_buckets(root, "r1") == set()
+
+
+def test_completed_buckets_over_spark_written_checkpoints(spark, tmp_path):
+    """Checkpoint tables written before the driver-side append hold Spark
+    part files and a ``_SUCCESS`` marker next to ``append_rows`` files.
+    The driver-side reader must see exactly the rows Spark's reader sees:
+    both files, and neither an orphaned ``_temporary/`` task file nor a
+    hidden append temp."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from martial_arts_ocr_spark.engine.schema import CHECKPOINT_SCHEMA
+
+    root = str(tmp_path / "wh")
+    path = catalog.table_path(root, CHECKPOINT_TABLE)
+    spark.createDataFrame(
+        [("r1", 0, "s0", "completed"), ("r1", 1, "s0", "completed"),
+         ("r2", 2, "s0", "completed"), ("r1", 3, None, "failed")],
+        CHECKPOINT_SCHEMA).write.mode("append").parquet(path)
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    catalog.append_rows(root, CHECKPOINT_TABLE,
+                        [("r1", 1, "s1", "completed"),
+                         ("r1", 4, "s1", "completed")], CHECKPOINT_SCHEMA)
+    orphan = pa.table({"run_id": ["r1"],
+                       "part_bucket": pa.array([5], pa.int32()),
+                       "snapshot_id": ["s2"], "status": ["completed"]})
+    os.makedirs(os.path.join(path, "_temporary", "0"))
+    pq.write_table(orphan, os.path.join(path, "_temporary", "0",
+                                        "part-x.parquet"))
+    pq.write_table(orphan.set_column(1, "part_bucket",
+                                     pa.array([6], pa.int32())),
+                   os.path.join(path, ".part-y.tmp"))
+
+    via_spark = {r.part_bucket for r in
+                 catalog.read_table(spark, root, CHECKPOINT_TABLE)
+                 .where((F.col("run_id") == "r1")
+                        & (F.col("status") == "completed")).collect()}
+    assert via_spark == {0, 1, 4}
+    assert completed_buckets(root, "r1") == via_spark
